@@ -7,6 +7,10 @@ the single seam where that swap happens.
 
 from __future__ import annotations
 
+from collections.abc import Iterable
+from pathlib import Path
+from urllib.parse import unquote, urlparse
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -76,6 +80,67 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             )
         return df
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+
+
+def footer_rows(
+    files: Iterable[str | Path], non_null: str | None = None
+) -> int | None:
+    """Row count of parquet ``files`` (local paths or ``file:`` URIs, e.g.
+    ``df.inputFiles()``) read from their FOOTERS — the number Spark
+    answers a bare ``count()`` with, without scheduling a Spark job.
+
+    ``non_null`` names a column whose rows must all be non-null: the
+    count is returned only when every row group's statistics PROVE it —
+    each leaf of that column has a ``null_count`` present and 0 (a
+    list leaf also counts null lists, empty lists and null elements, so
+    0 is a conservative proof). Then the count equals that of
+    ``df.filter(col(non_null).isNotNull())``. Returns ``None`` whenever
+    the footers cannot answer: a non-local file, a missing statistic, a
+    null, an absent column, or no rows at all — the caller counts
+    instead."""
+    import pyarrow.parquet as pq
+
+    total = 0
+    for f in files:
+        uri = urlparse(str(f))
+        if uri.scheme not in ("", "file"):
+            return None
+        meta = pq.read_metadata(unquote(uri.path))
+        total += meta.num_rows
+        if non_null is None:
+            continue
+        for g in range(meta.num_row_groups):
+            rg = meta.row_group(g)
+            leaves = [
+                rg.column(i)
+                for i in range(rg.num_columns)
+                if rg.column(i).path_in_schema == non_null
+                or rg.column(i).path_in_schema.startswith(non_null + ".")
+            ]
+            if not leaves or any(
+                c.statistics is None
+                or not c.statistics.has_null_count
+                or c.statistics.null_count != 0
+                for c in leaves
+            ):
+                return None
+    if non_null is not None and total == 0:
+        return None
+    return total
+
+
+def parquet_dir_rows(source_dir: str) -> int:
+    """Row count of a just-written parquet dir from its footers. Raises
+    ``FileNotFoundError`` when no ``*.parquet`` file sits directly in
+    ``source_dir``: a missing dir or a partitioned layout (part files one
+    level down) would otherwise read as 0 rows."""
+    files = sorted(Path(source_dir).glob("*.parquet"))
+    if not files:
+        raise FileNotFoundError(
+            f"no *.parquet file directly under {source_dir!r} "
+            "(missing or partitioned directory)"
+        )
+    return footer_rows(files)
 
 
 def register_views(spark: SparkSession, sf_dir: str) -> None:

@@ -71,10 +71,17 @@ def doc_tokens(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") ->
 
 
 def _shingle_rows(
-    df: DataFrame, n: int, text_col: str, id_col: str
+    df: DataFrame,
+    n: int,
+    text_col: str,
+    id_col: str,
+    carry: tuple[str, ...] = (),
 ) -> DataFrame:
-    """Non-distinct (id, tok) word n-gram shingle rows — the shared core of
-    the string and hashed shingle-set builders below."""
+    """Non-distinct (id, *carry, tok) word n-gram shingle rows — the shared
+    core of the string and hashed shingle-set builders below. ``carry``
+    names per-document columns passed through beside ``id`` (e.g. a
+    domain flag a per-(doc, shingle) aggregate keys on); the default adds
+    nothing, so the plan is unchanged for every caller that omits it."""
     # Docs shorter than n tokens produce no shingles; filtering them FIRST
     # makes every element_at position provably in-bounds (i ∈ [0, size−n],
     # j < n ⇒ i+j+1 ∈ [1, size]), so the plain ANSI-safe element_at applies
@@ -86,14 +93,18 @@ def _shingle_rows(
     # Single-parse expression strings (r19): the Column form of this
     # builder cost ~280 py4j round-trips per plan build, re-paid per run
     # by every shingle-consuming query (sameSemantics-pinned twin).
+    kept = [q_ident(c) for c in carry]
     toks = spread(df, id_col).selectExpr(
-        f"{q_ident(id_col)} AS id", f"{tokens_sql(q_ident(text_col))} AS ts"
+        f"{q_ident(id_col)} AS id",
+        *kept,
+        f"{tokens_sql(q_ident(text_col))} AS ts",
     ).filter(F.expr(f"size(ts) >= {n}"))
     shingle = "concat_ws(' ', " + ", ".join(
         f"element_at(ts, i + {j} + 1)" for j in range(n)
     ) + ")"
     return toks.selectExpr(
         "id",
+        *kept,
         f"explode(transform(sequence(0, size(ts) - {n}), i -> {shingle}))"
         " AS tok",
     )

@@ -17,9 +17,12 @@ bit-for-bit before rounding.
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..data import footer_rows
 from ..functions.text import lcg
 from .util import spread
 
@@ -28,6 +31,8 @@ __all__ = [
     "norm",
     "cosine",
     "topk_cosine",
+    "vector_rows",
+    "ivf_cells",
     "ivf_assign",
     "ivf_assign_multi",
     "ivf_assign_sharded",
@@ -134,9 +139,11 @@ def dot_sql(a: str, b: str) -> str:
     ``q_ident`` (a name containing a dot, backtick or keyword would
     otherwise mis-resolve or parse as SQL). In-tree call sites pass either
     q_ident-quoted names or fragments they rendered themselves."""
-    assert isinstance(a, str) and isinstance(b, str) and a and b, (
-        "dot_sql takes SQL fragment strings (q_ident-quote plain names)"
-    )
+    if not (isinstance(a, str) and isinstance(b, str) and a and b):
+        raise TypeError(
+            "dot_sql takes non-empty SQL fragment strings (q_ident-quote "
+            f"plain names); got {type(a).__name__} and {type(b).__name__}"
+        )
     return (
         f"aggregate(zip_with({a}, {b}, (x, y) -> cast(x as double) * "
         f"cast(y as double)), 0.0D, (acc, x) -> acc + x)"
@@ -206,6 +213,25 @@ def topk_cosine(
             F.col("rnk").cast("bigint").alias("rnk"),
         )
     )
+
+
+def vector_rows(emb: DataFrame, vec_col: str = "embedding") -> int:
+    """N, the row count of ``emb`` — a parquet scan of the embeddings
+    restricted to non-null ``vec_col``. Read from the footers of
+    ``emb.inputFiles()`` when their statistics prove ``vec_col`` null-free
+    (``data.footer_rows``): a metadata read instead of a count job inside
+    the plan build, where the not-null filter forces the array column to
+    be decoded. Otherwise (nulls, missing statistics, an empty table) it
+    counts."""
+    n = footer_rows(emb.inputFiles(), non_null=vec_col)
+    return emb.count() if n is None else n
+
+
+def ivf_cells(emb: DataFrame, vec_col: str = "embedding") -> int:
+    """Corpus-adaptive IVF cell count greatest(8, ceil(N/250)), N =
+    ``vector_rows(emb)``: |cell| ≈ 250 stays bounded as the corpus grows.
+    Every IVF oracle replays the same formula over its non-null count."""
+    return max(8, math.ceil(vector_rows(emb, vec_col) / 250))
 
 
 def ivf_assign(
@@ -1034,8 +1060,8 @@ def ivf_topk(
     vectors × 800 cells (PLANS.md round-15). The pin is ADAPTIVE because
     its ~1 s materialization cost dominates at small corpora (doubles
     the 2k-row driver-scale query); ``corpus_rows`` lets callers who
-    already counted the corpus (every registry caller does, for the
-    adaptive cell knob) avoid a second count job. Past ~100k vectors the
+    already know the corpus size (every registry caller reads it with
+    ``vector_rows`` for the adaptive cell knob) avoid a count job. Past ~100k vectors the
     sharded two-level variant (ext_sim_search_ivf_sharded) remains the
     scale path — it cuts the fold count itself rather than the
     re-evaluation factor.

@@ -19,6 +19,7 @@ from ..functions.text import (
     bpe_ish_token_count,
     fingerprint,
     hash60,
+    hash60_sql,
     quality_features,
     token_count,
     tokens,
@@ -47,6 +48,7 @@ from ..operators.similarity import (
     ivf_assign_sharded_3level,
     ivf_assign_sharded_multi,
     ivf_assign_two_level,
+    ivf_cells,
     ivf_topk,
     lsh_banded_pairs,
     lsh_bucketed_pairs,
@@ -58,6 +60,7 @@ from ..operators.similarity import (
     projection_planes,
     scored_cosine,
     topk_cosine,
+    vector_rows,
 )
 from ..operators.similarity import (
     _lit_matrix_sql,
@@ -1261,26 +1264,24 @@ def ext_sim_search_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     Cell count (re-keyed round 11, the r10 verdict's second `weak`): a
     FIXED 8 cells means |cell| = N/8 — every probe scans 12.5% of the
     corpus, a constant-factor saving that decays to an unpruned scan as
-    N grows. greatest(8, ceil(N/250)) — the count-derived-formula
-    pattern the graph family proved, replayed bit-for-bit by the oracle
-    — keeps |cell| ≈ 250 bounded, so per-probe work is O(1) in the
-    corpus and total SEARCH cost is O(|Q|·250) — but the flat
-    ASSIGNMENT pass is O(N·k) = O(N²/250) once k tracks N (measured
-    r15, BENCH_DETAIL sf10_probe: 27.8× wall for 10× rows at 20k→200k
-    after ivf_topk's r15 adaptive assignment pin halved it from 51×;
-    the sharded twin ext_sim_search_ivf_sharded holds 6.75× on the
-    same decade and is the path past ~100k vectors) — after the linear
-    assignment pass. Centroids are the smallest-N existing ids —
-    deterministic AND id-agnostic (a literal `vec_id < 8` crashed on the
-    round-7 large-id sweep); production k-means fits them offline. Null
-    embeddings are excluded corpus- and seed-side (the graph family's
-    null contract: a nulled seed row becomes a NULL centroid that the
+    N grows. greatest(8, ceil(N/250)) (``ivf_cells``) — the
+    count-derived-formula pattern the graph family proved, replayed
+    bit-for-bit by the oracle — keeps |cell| ≈ 250 bounded, so per-probe
+    work is O(1) in the corpus and total SEARCH cost is O(|Q|·250) — but the
+    flat ASSIGNMENT pass is O(N·k) = O(N²/250) once k tracks N (measured
+    r15, BENCH_DETAIL sf10_probe: 27.8× wall for 10× rows at 20k→200k after
+    ivf_topk's r15 adaptive assignment pin halved it from 51×; the sharded
+    twin ext_sim_search_ivf_sharded holds 6.75× on the same decade and is
+    the path past ~100k vectors) — after the linear assignment pass.
+    Centroids are the smallest-N existing ids — deterministic AND
+    id-agnostic (a literal `vec_id < 8` crashed on the round-7 large-id
+    sweep); production k-means fits them offline. Null embeddings are
+    excluded corpus- and seed-side (the graph family's null contract: a
+    nulled seed row becomes a NULL centroid that the
     two engines cell-scatter differently)."""
-    import math
-
     emb = load(spark, sf_dir, "embeddings").filter(F.col("embedding").isNotNull())
-    n = emb.count()
-    n_cells = max(8, math.ceil(n / 250))
+    n = vector_rows(emb)
+    n_cells = ivf_cells(emb)
     centroids = emb.orderBy("vec_id").limit(n_cells).select(
         F.col("vec_id").alias("cent_id"), F.col("embedding").alias("c_vec")
     )
@@ -1336,11 +1337,11 @@ def ext_sim_search_ivf_nprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     sort + slice, operators/similarity.py:ivf_assign_multi); the
     corpus-side plan is identical to ext_sim_search_ivf — still zero
     corpus shuffle, still one equi-join on the cell id. Cell count is the
-    corpus-adaptive greatest(8, ceil(N/250)) (re-keyed round 11 with the
-    whole search family: a fixed 8 cells decays to an unpruned scan as N
-    grows); probing 2 of ~N/250 cells scans ~500 rows per query instead
-    of a quarter of the corpus. Null embeddings excluded corpus- and
-    seed-side (graph-family null contract).
+    corpus-adaptive greatest(8, ceil(N/250)) of ``ivf_cells`` (re-keyed
+    round 11 with the whole search family: a fixed 8 cells decays to an
+    unpruned scan as N grows); probing 2 of ~N/250 cells scans ~500 rows per
+    query instead of a quarter of the corpus. Null embeddings excluded
+    corpus- and seed-side (graph-family null contract).
 
     Second-decade slope (measured r15, BENCH_DETAIL sf10_probe): 31.8×
     wall for 10× rows at 20k→200k — ivf_topk's r15 adaptive assignment
@@ -1348,11 +1349,9 @@ def ext_sim_search_ivf_nprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     assignment's O(N²/250) fold growth shared with the whole flat
     exhibit class. The sharded twin holds 6.75× on the same decade and
     is the path past ~100k vectors."""
-    import math
-
     emb = load(spark, sf_dir, "embeddings").filter(F.col("embedding").isNotNull())
-    n = emb.count()
-    n_cells = max(8, math.ceil(n / 250))
+    n = vector_rows(emb)
+    n_cells = ivf_cells(emb)
     centroids = emb.orderBy("vec_id").limit(n_cells).select(
         F.col("vec_id").alias("cent_id"), F.col("embedding").alias("c_vec")
     )
@@ -1427,25 +1426,25 @@ def ext_sim_search_ivf_nprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
 def ext_sim_search_ivf_sharded(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF similarity search over the SHARDED two-level index — the
     search-family twin of ext_knn_graph_ivf_sharded, closing the gap the
-    adaptive cell count itself opens: once k = ⌈N/250⌉, the flat
-    ``ivf_assign`` inside ivf_topk broadcasts an O(N)-bytes codebook —
-    the exact structure the graph family removed this round. Here the
-    corpus is assigned by ``ivf_assign_sharded`` (only the ⌈√k⌉ coarse
-    array broadcast; leaves arrive via the shuffle_hash-pinned branch
-    join), the assignment is pinned ONCE and serves both sides: the
-    query rows (vec_id < 5) are filtered FROM it and broadcast (|Q|
-    bounded), so the search join streams the assigned corpus through a
-    map-side hash join on the cell id — candidates ≈ |Q|·250 rows
-    scored, per-query top-10 under WindowGroupLimit. At 100 TB every
-    structure is bounded: O(√k) broadcast index, one branch-keyed
-    corpus shuffle (the assignment), |Q|-bounded query broadcast,
-    |Q|·250 fold work. Null embeddings excluded corpus- and seed-side;
-    oracle replays the full two-level argmax + cell-restricted top-10
+    adaptive cell count itself opens: once k = ⌈N/250⌉ (``ivf_cells``), the
+    flat ``ivf_assign`` inside ivf_topk broadcasts an O(N)-bytes codebook —
+    the exact structure the graph family removed this round. Here the corpus
+    is assigned by ``ivf_assign_sharded`` (only the ⌈√k⌉ coarse array
+    broadcast; leaves arrive via the shuffle_hash-pinned branch join), the
+    assignment is pinned ONCE and serves both sides: the query rows (vec_id
+    < 5) are filtered FROM it and broadcast (|Q| bounded), so the search
+    join streams the assigned corpus through a map-side hash join on the
+    cell id — candidates ≈ |Q|·250 rows scored, per-query top-10 under
+    WindowGroupLimit. At 100 TB every structure is bounded: O(√k) broadcast
+    index, one branch-keyed corpus shuffle (the assignment), |Q|-bounded
+    query broadcast, |Q|·250 fold work. Null embeddings excluded corpus- and
+    seed-side; oracle replays the full two-level argmax + cell-restricted
+    top-10
     bit-for-bit."""
     import math
 
     emb = load(spark, sf_dir, "embeddings").filter(F.col("embedding").isNotNull())
-    n_cells = max(8, math.ceil(emb.count() / 250))
+    n_cells = ivf_cells(emb)
     n_coarse = max(2, min(n_cells - 1, math.ceil(math.sqrt(n_cells))))
     centroids = emb.orderBy("vec_id").limit(n_cells).select(
         F.col("vec_id").alias("cent_id"), F.col("embedding").alias("c_vec")
@@ -1589,29 +1588,29 @@ def ext_sim_search_ivf_3level(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF similarity search over the THREE-level sharded index (r17
     verdict #1) — the next rung of the construction ladder the sf100
     probe priced: the two-level sharded assignment is O(N·√k) fold work
-    under the corpus-adaptive k = ⌈N/250⌉, whose decade ratio the probe
-    measured at 17.1× converging on the designed 31.6×/decade asymptote
-    (BENCH_DETAIL sf100_probe). ``ivf_assign_sharded_3level`` splits the
-    descent into three balanced levels (⌈∛k⌉ broadcast tops → k^(2/3)
-    mids sharded by top branch → k leaves sharded by mid branch), taking
-    total assignment work to O(N·∛k) = O(N^4/3) — asymptotic decade
-    ratio 10^(4/3) ≈ 21.5× — and the per-task index ceiling from O(√k)
-    to O(∛k) bytes, at the price of one extra branch-keyed corpus
-    shuffle. Search shape is the sharded twin's verbatim: the assignment
-    is pinned ONCE and serves both sides; query rows (vec_id < 5) are
-    filtered from it and broadcast; candidates ≈ |Q|·250 rows scored,
-    per-query top-10 under WindowGroupLimit. Level sizes derive from the
-    corpus count by the same replayable-formula pattern as the cell
-    count (⌈∛k⌉ / ⌈k^(2/3)⌉ with the family's degenerate-smallness
-    clamps); the oracle recomputes them bit-for-bit — cbrt agrees
-    between engines because both bind the same libm. Null embeddings
-    excluded corpus- and seed-side; NULL-branch rows (a top with no
-    mids, a mid with no leaves) drop out exactly as the two-level
+    under the corpus-adaptive k = ⌈N/250⌉ (``ivf_cells``), whose decade
+    ratio the probe measured at 17.1× converging on the designed
+    31.6×/decade asymptote (BENCH_DETAIL sf100_probe).
+    ``ivf_assign_sharded_3level`` splits the descent into three balanced
+    levels (⌈∛k⌉ broadcast tops → k^(2/3) mids sharded by top branch → k
+    leaves sharded by mid branch), taking total assignment work to O(N·∛k) =
+    O(N^4/3) — asymptotic decade ratio 10^(4/3) ≈ 21.5× — and the per-task
+    index ceiling from O(√k) to O(∛k) bytes, at the price of one extra
+    branch-keyed corpus shuffle. Search shape is the sharded twin's
+    verbatim: the assignment is pinned ONCE and serves both sides; query
+    rows (vec_id < 5) are filtered from it and broadcast; candidates ≈
+    |Q|·250 rows scored, per-query top-10 under WindowGroupLimit. Level
+    sizes derive from the corpus count by the same replayable-formula
+    pattern as the cell count (⌈∛k⌉ / ⌈k^(2/3)⌉ with the family's
+    degenerate-smallness clamps); the oracle recomputes them bit-for-bit —
+    cbrt agrees between engines because both bind the same libm. Null
+    embeddings excluded corpus- and seed-side; NULL-branch rows (a top with
+    no mids, a mid with no leaves) drop out exactly as the two-level
     contract describes."""
     import math
 
     emb = load(spark, sf_dir, "embeddings").filter(F.col("embedding").isNotNull())
-    k = max(8, math.ceil(emb.count() / 250))
+    k = ivf_cells(emb)
     n_top = max(2, min(k - 1, math.ceil(math.cbrt(k))))
     n_mid = max(n_top + 1, min(k - 1, math.ceil(k ** (2.0 / 3.0))))
     centroids = emb.orderBy("vec_id").limit(k).select(
@@ -2925,11 +2924,11 @@ def ext_sim_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     is exactly why measuring recall on a sample is the deployment gate, not
     a full-corpus self-join.
 
-    Cell count is the corpus-adaptive greatest(8, ceil(N/250)) (re-keyed
-    round 11 with the whole search family — the audit must measure the
-    SHIPPED index, and the shipped index no longer uses fixed 8 cells);
-    null embeddings excluded corpus- and seed-side (graph-family null
-    contract).
+    Cell count is the corpus-adaptive greatest(8, ceil(N/250)) of
+    ``ivf_cells`` (re-keyed round 11 with the whole search family — the
+    audit must measure the SHIPPED index, and the shipped index no longer
+    uses fixed 8 cells); null embeddings excluded corpus- and seed-side
+    (graph-family null contract).
 
     QUERY RULE (re-keyed r13): the 5 smallest NON-CENTROID ids. The
     first n_cells ids are the data-sampled centroids themselves — a
@@ -2946,10 +2945,8 @@ def ext_sim_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     engines. Empty output from this audit therefore means "corpus too
     small to audit", never "recall is fine" — consumers must treat
     0 rows as no-measurement, not as a pass."""
-    import math
-
     emb = load(spark, sf_dir, "embeddings").filter(F.col("embedding").isNotNull())
-    n_cells = max(8, math.ceil(emb.count() / 250))
+    n_cells = ivf_cells(emb)
     centroids = emb.orderBy("vec_id").limit(n_cells).select(
         F.col("vec_id").alias("cent_id"), F.col("embedding").alias("c_vec")
     )
@@ -3386,27 +3383,24 @@ def ext_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     ≥ 0.2. The cluster-scoped pairwise pass is the method's whole point
     at 100 TB: candidate pairs are O(Σ cell²), bounded by cell size —
     k MUST scale with the corpus for that bound to hold, so the cell
-    count is the corpus-adaptive greatest(8, ceil(N/250)) (re-keyed
-    round 11: the previous fixed 8 cells made in-cell pairs O(N²/8),
-    exactly the quadratic the paper's clustering exists to avoid; the
-    docstring claimed N/k ~constant — now the code does it, replayed
-    bit-for-bit by the oracle). Assignment is the zero-shuffle in-row
-    argmax (operators/similarity.py:ivf_assign); the assigned table is
-    pinned because the x-side, y-side, and the final keep-flag join all
-    consume it — without the pin the corpus is scanned and argmax'd
-    three times. Null embeddings excluded corpus- and seed-side
-    (graph-family null contract). The adaptive k makes the flat
-    assignment's broadcast codebook O(N) bytes at the extreme — at that
-    point the assignment swaps to ivf_assign_sharded (identical
-    semantics, O(√k) broadcast ceiling; the graph family ships that
-    form) with no change to the in-cell pass. Differs from
-    ext_dedup_embed (sign-LSH buckets): cells here are learned density
-    regions, the published recipe for semantic (not near-literal)
+    count is the corpus-adaptive greatest(8, ceil(N/250)) of ``ivf_cells``
+    (re-keyed round 11: the previous fixed 8 cells made in-cell pairs
+    O(N²/8), exactly the quadratic the paper's clustering exists to avoid;
+    the docstring claimed N/k ~constant — now the code does it, replayed
+    bit-for-bit by the oracle). Assignment is the zero-shuffle in-row argmax
+    (operators/similarity.py:ivf_assign); the assigned table is pinned
+    because the x-side, y-side, and the final keep-flag join all consume it
+    — without the pin the corpus is scanned and argmax'd three times. Null
+    embeddings excluded corpus- and seed-side (graph-family null contract).
+    The adaptive k makes the flat assignment's broadcast codebook O(N) bytes
+    at the extreme — at that point the assignment swaps to
+    ivf_assign_sharded (identical semantics, O(√k) broadcast ceiling; the
+    graph family ships that form) with no change to the in-cell pass.
+    Differs from ext_dedup_embed (sign-LSH buckets): cells here are learned
+    density regions, the published recipe for semantic (not near-literal)
     duplicate pruning."""
-    import math
-
     emb = load(spark, sf_dir, "embeddings").filter(F.col("embedding").isNotNull())
-    n_cells = max(8, math.ceil(emb.count() / 250))
+    n_cells = ivf_cells(emb)
     centroids = emb.orderBy("vec_id").limit(n_cells).select(
         F.col("vec_id").alias("cent_id"), F.col("embedding").alias("c_vec")
     )
@@ -3491,60 +3485,46 @@ def ext_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast hash join + a doc-keyed sum that partial-aggregates
     map-side. Nothing corpus-sized shuffles twice, and the quadratic
     vocabulary of raw bigrams never materializes — that is DSIR's hashing
-    trick, and it is what makes the method run at 100 TB."""
-    docs = load(spark, sf_dir, "documents")
-    # tokenize once behind a lineage barrier: projection collapse inlines an
-    # outer array expression into per-position lambda accesses (split()
-    # re-evaluated per bigram slice); pinning the token arrays measured
-    # 3.2 s -> 0.8 s for this stage at sf0.1 (same fix as
-    # ext_tfidf_cosine_pairs, warehouse.py)
-    base = docs.select(
-        F.col("doc_id").alias("id"),
-        (F.col("source") == "src0").alias("is_t"),
-        tokens(F.col("text")).alias("ts"),
-    ).localCheckpoint(eager=True)
-    tk = F.col("ts")
-    bigrams = F.filter(
-        F.transform(
-            F.sequence(F.lit(0), F.greatest(F.size(tk) - 2, F.lit(0))),
-            lambda i: F.concat_ws(" ", F.slice(tk, i + 1, 2)),
-        ),
-        lambda s: F.size(F.split(s, " ")) == 2,
+    trick, and it is what makes the method run at 100 TB.
+
+    The bigrams come from the shared n-gram builder (``_shingle_rows``,
+    n = 2), the same construction every shingle-set query uses, with the
+    target-domain flag carried beside the doc id. Its ``spread`` gives the
+    tokenize/hash stage full cluster width when the documents arrive in
+    fewer partitions than cores (one parquet row group reads as one
+    task), and its per-position ``element_at`` form evaluates ``split``
+    once per document, so no lineage barrier is needed before it."""
+    docs = load(spark, sf_dir, "documents").selectExpr(
+        "doc_id", "text", "source = 'src0' AS is_t"
     )
     B = 10007
-    rows = base.select("id", "is_t", F.explode(bigrams).alias("tok")).select(
-        "id", "is_t", (hash60(F.col("tok")) % B).alias("b")
+    rows = _shingle_rows(docs, 2, "text", "doc_id", carry=("is_t",)).selectExpr(
+        "id", "is_t", f"{hash60_sql('tok')} % {B} AS b"
     )
     pin = (
         rows.groupBy("id", "is_t", "b")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("c"))
+        .agg(F.expr("cast(count(1) as bigint) AS c"))
         .localCheckpoint(eager=True)
     )
     bucket = pin.groupBy("b").agg(
-        F.sum("c").cast("bigint").alias("n_raw"),
-        F.sum(F.when(F.col("is_t"), F.col("c")).otherwise(0))
-        .cast("bigint")
-        .alias("n_t"),
+        F.expr("cast(sum(c) as bigint) AS n_raw"),
+        F.expr("cast(sum(CASE WHEN is_t THEN c ELSE 0 END) as bigint) AS n_t"),
     )
     tot = bucket.agg(
-        F.sum("n_raw").cast("bigint").alias("tr"),
-        F.sum("n_t").cast("bigint").alias("tt"),
+        F.expr("cast(sum(n_raw) as bigint) AS tr"),
+        F.expr("cast(sum(n_t) as bigint) AS tt"),
     )
-    ratio = bucket.join(F.broadcast(tot), how="cross").select(
+    ratio = bucket.join(F.broadcast(tot), how="cross").selectExpr(
         "b",
-        (
-            F.log((F.col("n_t") + 1).cast("double") / (F.col("tt") + B).cast("double"))
-            - F.log(
-                (F.col("n_raw") + 1).cast("double") / (F.col("tr") + B).cast("double")
-            )
-        ).alias("lr"),
+        f"ln(cast(n_t + 1 as double) / cast(tt + {B} as double))"
+        f" - ln(cast(n_raw + 1 as double) / cast(tr + {B} as double)) AS lr",
     )
     return (
         pin.join(F.broadcast(ratio), "b")
-        .groupBy(F.col("id").alias("doc_id"))
+        .groupBy(F.expr("id AS doc_id"))
         .agg(
-            F.sum("c").cast("bigint").alias("n_bigrams"),
-            F.round(F.sum(F.col("c") * F.col("lr")), 4).alias("dsir_logw"),
+            F.expr("cast(sum(c) as bigint) AS n_bigrams"),
+            F.expr("round(sum(c * lr), 4) AS dsir_logw"),
         )
     )
 
@@ -4123,13 +4103,13 @@ def ext_knn_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     10× data (400 k → 40 M pairs). Re-keying the equi-join to the
     composite (label, cell) key preserves the same-label semantics
     while bounding the block: the cell count scales with the corpus
-    (greatest(8, ceil(N/250)) — the count-derived-formula pattern of
-    ext_dedup_embed's adaptive_planes, replayed bit-for-bit by the
-    oracle), so |cell| ≈ 250 and within-block pairs are ≤ N·250 —
-    linear. Neighbors are exact within (label ∩ cell); cross-cell
-    same-label neighbors are the recall cost, tunable by nprobe-style
-    multi-assign exactly as in ext_sim_search_ivf_nprobe, and measured
-    for the cell-blocked family by ext_knn_graph_recall.
+    (greatest(8, ceil(N/250)) of ``ivf_cells`` — the count-derived-formula
+    pattern of ext_dedup_embed's adaptive_planes, replayed bit-for-bit by
+    the oracle), so |cell| ≈ 250 and within-block pairs are ≤ N·250 —
+    linear. Neighbors are exact within (label ∩ cell); cross-cell same-label
+    neighbors are the recall cost, tunable by nprobe-style multi-assign
+    exactly as in ext_sim_search_ivf_nprobe, and measured for the
+    cell-blocked family by ext_knn_graph_recall.
 
     Plan: zero-shuffle broadcast-argmax assignment (ivf_assign), pinned
     once (localCheckpoint) before the self-equi-join so both sides scan
@@ -4152,10 +4132,8 @@ def ext_knn_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     assignment. Past ~100k vectors, block on the TWO-LEVEL assignment
     instead (swap ivf_assign for the hier/sharded coarse→leaf path, as
     ext_knn_graph_prod does — 6.4–7.5× on the same decade)."""
-    import math
-
     emb = load(spark, sf_dir, "embeddings").filter(F.col("embedding").isNotNull())
-    n_cells = max(8, math.ceil(emb.count() / 250))
+    n_cells = ivf_cells(emb)
     centroids = emb.orderBy("vec_id").limit(n_cells).select(
         F.col("vec_id").alias("cent_id"), F.col("embedding").alias("c_vec")
     )
@@ -4257,11 +4235,11 @@ def ext_knn_graph_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     within-block Σ|b|² work grows quadratically (measured by the round-9
     sf1 probe: 100× pairs for 10× vectors). Blocking by the coarse
     quantizer fixes that: the cell count SCALES WITH THE CORPUS —
-    greatest(8, ceil(N/250)) cells, the same count-derived-formula
-    pattern as ext_dedup_embed's adaptive_planes, replayed bit-for-bit
-    by the oracle — so |cell| ≈ 250 stays bounded and the graph build
-    stays linear. Neighbors are exact WITHIN a cell and recall across
-    cell boundaries tunes via nprobe-style multi-assign
+    greatest(8, ceil(N/250)) cells (``ivf_cells``), the same
+    count-derived-formula pattern as ext_dedup_embed's adaptive_planes,
+    replayed bit-for-bit by the oracle — so |cell| ≈ 250 stays bounded and
+    the graph build stays linear. Neighbors are exact WITHIN a cell and
+    recall across cell boundaries tunes via nprobe-style multi-assign
     (ivf_assign_multi), exactly as in ext_sim_search_ivf_nprobe.
 
     Plan: the zero-shuffle broadcast-argmax assignment (ivf_assign) runs
@@ -4293,10 +4271,8 @@ def ext_knn_graph_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     second_decade_probe), while the two-level variants — ivf_hier /
     ivf_sharded / prod, which replace exactly this stage — measured
     6.4–7.5× on the same decade. Past ~100k vectors, use those."""
-    import math
-
     emb = load(spark, sf_dir, "embeddings").filter(F.col("embedding").isNotNull())
-    n_cells = max(8, math.ceil(emb.count() / 250))
+    n_cells = ivf_cells(emb)
     centroids = emb.orderBy("vec_id").limit(n_cells).select(
         F.col("vec_id").alias("cent_id"), F.col("embedding").alias("c_vec")
     )
@@ -4420,18 +4396,16 @@ def ext_knn_graph_ivf_multi(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     SECOND-DECADE CAVEAT (measured r15, BENCH_DETAIL sf10_probe +
     second_decade_probe): the FLAT assignment itself is O(N·k) =
-    O(N²/250) once k = ⌈N/250⌉ tracks the corpus — candidate volume in
-    the graph join stays linear, but assignment SCORING does not. At
-    20k→200k vectors the fold count grows 100× and the assignment wall
-    45× (5.9 → 263.8 s, 88% of the total; whole query 24.5× for 10×
-    rows), while the two-level siblings — ivf_hier / ivf_sharded /
-    prod, built to remove exactly this cost — measured 6.4–7.5× on the
-    same decade. Past ~100k vectors the nprobe dial should ride the
+    O(N²/250) once k = ⌈N/250⌉ (``ivf_cells``) tracks the corpus — candidate
+    volume in the graph join stays linear, but assignment SCORING does not.
+    At 20k→200k vectors the fold count grows 100× and the assignment wall
+    45× (5.9 → 263.8 s, 88% of the total; whole query 24.5× for 10× rows),
+    while the two-level siblings — ivf_hier / ivf_sharded / prod, built to
+    remove exactly this cost — measured 6.4–7.5× on the same decade. Past
+    ~100k vectors the nprobe dial should ride the
     tree assignment (prod), not this flat exhibit."""
-    import math
-
     emb = load(spark, sf_dir, "embeddings").filter(F.col("embedding").isNotNull())
-    n_cells = max(8, math.ceil(emb.count() / 250))
+    n_cells = ivf_cells(emb)
     centroids = emb.orderBy("vec_id").limit(n_cells).select(
         F.col("vec_id").alias("cent_id"), F.col("embedding").alias("c_vec")
     )
@@ -4551,16 +4525,16 @@ def ext_knn_graph_ivf_multi(spark: SparkSession, sf_dir: str) -> DataFrame:
 def ext_knn_graph_ivf_hier(spark: SparkSession, sf_dir: str) -> DataFrame:
     """kNN graph with a TWO-LEVEL quantizer assignment — the 100×-scale
     tier of the IVF graph family. The corpus-adaptive cell count
-    k = ⌈N/250⌉ is what keeps |cell| bounded and the self-join's
-    candidate volume linear, but it makes the FLAT assignment's
-    per-vector scoring O(k): at 100× the corpus the broadcast-argmax
-    scores 100× more centroids per row — O(N·k) = O(N²/250) compute
-    even though it never shuffles. The hierarchical assignment
-    (operators/similarity.py::ivf_assign_two_level) scores
-    ⌈√k⌉ coarse centroids, then only that branch's ~√k leaves:
-    O(N·√k) total, the standard two-level IVF design. The leaf
-    partition is exactly as granular as the flat form's, so the graph
-    build downstream (cell equi-join, per-vector top-3) is unchanged.
+    k = ⌈N/250⌉ (``ivf_cells``) is what keeps |cell| bounded and the
+    self-join's candidate volume linear, but it makes the FLAT assignment's
+    per-vector scoring O(k): at 100× the corpus the broadcast-argmax scores
+    100× more centroids per row — O(N·k) = O(N²/250) compute even though it
+    never shuffles. The hierarchical assignment
+    (operators/similarity.py::ivf_assign_two_level) scores ⌈√k⌉ coarse
+    centroids, then only that branch's ~√k leaves: O(N·√k) total, the
+    standard two-level IVF design. The leaf partition is exactly as granular
+    as the flat form's, so the graph build downstream (cell equi-join,
+    per-vector top-3) is unchanged.
 
     The assignment is approximate ACROSS branches (a vector near a
     branch boundary may land in a different leaf than the flat argmax
@@ -4577,7 +4551,7 @@ def ext_knn_graph_ivf_hier(spark: SparkSession, sf_dir: str) -> DataFrame:
     import math
 
     emb = load(spark, sf_dir, "embeddings").filter(F.col("embedding").isNotNull())
-    n_cells = max(8, math.ceil(emb.count() / 250))
+    n_cells = ivf_cells(emb)
     # clamp: n_coarse >= n_cells would make every centroid both coarse
     # and leaf — strictly more work than flat ivf_assign for the same
     # result (degenerate case documented on the operator). With the
@@ -4704,18 +4678,18 @@ def ext_knn_graph_ivf_sharded(spark: SparkSession, sf_dir: str) -> DataFrame:
     remaining `weak`). ext_knn_graph_ivf_hier fixed assignment COMPUTE
     (O(N·√k) scoring instead of O(N·k)) but still shipped the whole
     k-entry leaf map as one broadcast row to every task: under the
-    corpus-adaptive k = ⌈N/250⌉ that broadcast is O(N) BYTES — at the
-    100 TB design point (~10¹¹ vectors) a multi-hundred-GB row no
+    corpus-adaptive k = ⌈N/250⌉ (``ivf_cells``) that broadcast is O(N) BYTES
+    — at the 100 TB design point (~10¹¹ vectors) a multi-hundred-GB row no
     executor holds. Here (operators/similarity.py::ivf_assign_sharded)
-    nothing linear in N rides a broadcast: only the ⌈√k⌉ coarse array
-    is broadcast, vectors are hash-partitioned by their coarse branch,
-    and each branch's ~√k leaves arrive through a shuffled equi-join on
-    coarse_id (strategy pinned by a `shuffle_hash` hint — without it
-    AQE would re-broadcast the locally-tiny leaf table and reintroduce
-    the structure; enforced by a plan test). The trade is ONE corpus
-    shuffle keyed by branch — bytes proportional to the corpus, the
-    same order as the cell self-join that follows, in exchange for an
-    O(√k) ceiling on per-task index bytes.
+    nothing linear in N rides a broadcast: only the ⌈√k⌉ coarse array is
+    broadcast, vectors are hash-partitioned by their coarse branch, and each
+    branch's ~√k leaves arrive through a shuffled equi-join on coarse_id
+    (strategy pinned by a `shuffle_hash` hint — without it AQE would
+    re-broadcast the locally-tiny leaf table and reintroduce the structure;
+    enforced by a plan test). The trade is ONE corpus shuffle keyed by
+    branch — bytes proportional to the corpus, the same order as the cell
+    self-join that follows, in exchange for an O(√k) ceiling on per-task
+    index bytes.
 
     The assignment itself is the SAME two-level argmax as hier
     (identical tree, identical cells — the oracle is hier's, replayed
@@ -4729,7 +4703,7 @@ def ext_knn_graph_ivf_sharded(spark: SparkSession, sf_dir: str) -> DataFrame:
     import math
 
     emb = load(spark, sf_dir, "embeddings").filter(F.col("embedding").isNotNull())
-    n_cells = max(8, math.ceil(emb.count() / 250))
+    n_cells = ivf_cells(emb)
     # clamp as in ext_knn_graph_ivf_hier: n_coarse >= n_cells degenerates
     # to strictly-more-work flat assignment (documented on the operator)
     n_coarse = max(2, min(n_cells - 1, math.ceil(math.sqrt(n_cells))))
@@ -4967,17 +4941,17 @@ def ext_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     contrastive run consumes).
 
     Scale shape is the graph family's, unchanged: candidates are blocked
-    by the corpus-adaptive IVF cell (greatest(8, ceil(N/250)) — |cell| ≈
-    250 bounded, candidate volume linear in N), the label mismatch is a
-    cheap residual FILTER on the cell equi-join (labels have tiny
-    cardinality, so ~(1 − 1/|labels|) of in-cell pairs survive — the
-    filter can't be a join key precisely because it's an inequality),
-    per-anchor top-3 compiles to WindowGroupLimit, and the pinned
-    assignment + numbered-width repartition discipline carries over.
-    Like any blocked ANN, negatives are exact WITHIN the anchor's cell;
-    recall across cells tunes by the same multi-assign knob the graph
-    family measures. Null embeddings excluded corpus- and seed-side;
-    signed zero canonicalized — family contracts inherited.
+    by the corpus-adaptive IVF cell (greatest(8, ceil(N/250)) of
+    ``ivf_cells`` — |cell| ≈ 250 bounded, candidate volume linear in N), the
+    label mismatch is a cheap residual FILTER on the cell equi-join (labels
+    have tiny cardinality, so ~(1 − 1/|labels|) of in-cell pairs survive —
+    the filter can't be a join key precisely because it's an inequality),
+    per-anchor top-3 compiles to WindowGroupLimit, and the pinned assignment
+    + numbered-width repartition discipline carries over. Like any blocked
+    ANN, negatives are exact WITHIN the anchor's cell; recall across cells
+    tunes by the same multi-assign knob the graph family measures. Null
+    embeddings excluded corpus- and seed-side; signed zero canonicalized —
+    family contracts inherited.
 
     SECOND-DECADE CAVEAT (measured r15, BENCH_DETAIL sf10_probe +
     second_decade_probe): the linear claim above is candidate volume —
@@ -4989,10 +4963,8 @@ def ext_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     quadratic is intrinsic, not re-evaluation. Past ~100k vectors, mine
     negatives on the two-level assignment (the prod/hier/sharded
     coarse→leaf path, 6.4–7.5× on the same decade)."""
-    import math
-
     emb = load(spark, sf_dir, "embeddings").filter(F.col("embedding").isNotNull())
-    n_cells = max(8, math.ceil(emb.count() / 250))
+    n_cells = ivf_cells(emb)
     centroids = emb.orderBy("vec_id").limit(n_cells).select(
         F.col("vec_id").alias("cent_id"), F.col("embedding").alias("c_vec")
     )
@@ -5151,12 +5123,12 @@ _PROD_TREE_CTES = """
 def ext_knn_graph_prod(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The graph family's PRODUCTION COMPOSITION in one query — every
     knob the exhibits measured separately, composed: corpus-adaptive
-    cell count (k = ⌈N/250⌉ keeps the build linear), query-side
-    multi-probe nprobe=2 (the measured +16pp edge-recall trade at
-    exactly 2× candidates), and the SHARDED two-level index transport
-    (only the ⌈√k⌉ coarse array is broadcast; each branch's ~√k leaves
-    arrive through the shuffle_hash-pinned coarse_id equi-join — no
-    O(N)-bytes structure anywhere, the r10 verdict's last `weak`).
+    cell count (k = ⌈N/250⌉ of ``ivf_cells`` keeps the build linear),
+    query-side multi-probe nprobe=2 (the measured +16pp edge-recall trade at
+    exactly 2× candidates), and the SHARDED two-level index transport (only
+    the ⌈√k⌉ coarse array is broadcast; each branch's ~√k leaves arrive
+    through the shuffle_hash-pinned coarse_id equi-join — no O(N)-bytes
+    structure anywhere, the r10 verdict's last `weak`).
 
     Assignment (operators/similarity.py::ivf_assign_sharded_multi):
     top-4 coarse branches in-row over the broadcast coarse array, the
@@ -5197,8 +5169,8 @@ def ext_knn_graph_prod(spark: SparkSession, sf_dir: str) -> DataFrame:
     import math
 
     emb = load(spark, sf_dir, "embeddings").filter(F.col("embedding").isNotNull())
-    n = emb.count()
-    n_cells = max(8, math.ceil(n / 250))
+    n = vector_rows(emb)
+    n_cells = ivf_cells(emb)
     n_coarse = max(2, min(n_cells - 1, math.ceil(math.sqrt(n_cells))))
     # residence cap (r11 verdict #1): each cell keeps at most 2× the
     # average occupancy of its ORIGINAL probe-1 residents; overflow swaps
@@ -5326,13 +5298,12 @@ def ext_knn_graph_prod_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_round13_ops.py::test_prod_tree_regime_edge_recall_pin.
 
     MINIMUM CORPUS (ADVICE r13 #3): the non-centroid seed rule needs
-    N > n_cells non-null embeddings (n_cells floor is 8); below that
-    the seed sample is empty and the audit returns ZERO ROWS on both
+    N > n_cells non-null embeddings (n_cells = ``ivf_cells``, floor 8);
+    below that the seed sample is empty and the audit returns ZERO ROWS on
+    both
     engines — treat 0 rows as no-measurement, never as a pass."""
-    import math
-
     emb = load(spark, sf_dir, "embeddings").filter(F.col("embedding").isNotNull())
-    n_cells = max(8, math.ceil(emb.count() / 250))
+    n_cells = ivf_cells(emb)
     seeds = emb.orderBy("vec_id").offset(n_cells).limit(50).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
@@ -5471,13 +5442,12 @@ def ext_knn_graph_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     null contract).
 
     MINIMUM CORPUS (ADVICE r13 #3): the non-centroid seed rule needs
-    N > n_cells non-null embeddings (n_cells floor is 8); below that
-    the seed sample is empty and the audit returns ZERO ROWS on both
+    N > n_cells non-null embeddings (n_cells = ``ivf_cells``, floor 8);
+    below that the seed sample is empty and the audit returns ZERO ROWS on
+    both
     engines — treat 0 rows as no-measurement, never as a pass."""
-    import math
-
     emb = load(spark, sf_dir, "embeddings").filter(F.col("embedding").isNotNull())
-    n_cells = max(8, math.ceil(emb.count() / 250))
+    n_cells = ivf_cells(emb)
     centroids = emb.orderBy("vec_id").limit(n_cells).select(
         F.col("vec_id").alias("cent_id"), F.col("embedding").alias("c_vec")
     )

@@ -28,6 +28,8 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
+from ..data import parquet_dir_rows
+
 
 def _drain_timeout(timeout_sec: int | None) -> int:
     """Default drain budget for bounded availableNow runs. 600 s covers
@@ -207,26 +209,11 @@ def parquet_stream(
     STREAM_STATE_TARGET_ROWS)."""
     writer = df.coalesce(1) if single_file else df
     writer.write.mode("overwrite").parquet(source_dir)
-    note_stream_volume(_parquet_dir_rows(source_dir))
+    # footer read, not a Spark job: the job-submission overhead (~0.15-0.6 s
+    # per staged source, measured r19) was the tier's second-largest fixed
+    # cost after no-data batches
+    note_stream_volume(parquet_dir_rows(source_dir))
     return spark.readStream.schema(df.schema).parquet(source_dir)
-
-
-def _parquet_dir_rows(source_dir: str) -> int:
-    """Row count of a just-staged parquet dir from the FOOTER metadata —
-    the same number ``spark.read.parquet(dir).count()`` returns (Spark
-    answers a bare count from the same footers), without scheduling a
-    Spark job for it. The staging count runs once per streaming query per
-    bench run; the job-submission overhead (~0.15-0.6 s each, measured
-    r19) was the second-largest fixed cost in the tier after no-data
-    batches."""
-    from pathlib import Path
-
-    import pyarrow.parquet as pq
-
-    return sum(
-        pq.ParquetFile(str(p)).metadata.num_rows
-        for p in Path(source_dir).glob("*.parquet")
-    )
 
 
 def run_to_memory(

@@ -13,6 +13,7 @@ via tests/test_oracle_parity.canonical_rows). Expect MISMATCHES: 0.
 
     python scripts/driver_sim.py                     # ~4.5 min on local[32]
     SPARK_GRAFT_VERIFY_SF_DIR=/path/to/sfX python scripts/driver_sim.py
+    SPARK_GRAFT_CPUS=4 SPARK_GRAFT_DRIVER_MEM=4g python scripts/driver_sim.py
 
 Paths are derived from this file's location (ADVICE r15 #2 — no
 hardcoded checkout path), so the script runs from any clone; the
@@ -39,11 +40,14 @@ SF = os.environ.get("SPARK_GRAFT_VERIFY_SF_DIR", "/root/testdata/sf0.01")
 TABLES = ("region nation customer supplier part orders lineitem events "
           "documents embeddings").split()
 
+# core count and driver heap follow the host (same variables as the
+# engine's session factory); the defaults are the 32-core settings
+CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
 spark = (
-    SparkSession.builder.master("local[32]")
-    .config("spark.sql.shuffle.partitions", "32")
+    SparkSession.builder.master(f"local[{CPUS}]")
+    .config("spark.sql.shuffle.partitions", CPUS)
     .config("spark.sql.session.timeZone", "America/Chicago")
-    .config("spark.driver.memory", "24g")
+    .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
     .getOrCreate()
 )
 

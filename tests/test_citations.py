@@ -4,6 +4,11 @@ self-references). Round-6 verdict finding: two docstrings cited
 ``backfill_historical_data.py``, a file that does not exist in the
 snapshot — citations the judge cannot check are worse than none, so this
 test greps them all.
+
+Where the snapshot directory is absent, citations resolve against
+``reference_manifest.txt``: the reference files SURVEY.md cites, checked
+in. The manifest may only hold paths SURVEY.md cites, so it cannot grow
+to cover a package citation the survey never made.
 """
 
 from __future__ import annotations
@@ -14,6 +19,8 @@ import re
 PKG = os.path.join(os.path.dirname(__file__), "..", "cta_train_tracker_analytics_spark")
 REFERENCE = "/root/reference"
 REPO = os.path.join(os.path.dirname(__file__), "..")
+MANIFEST = os.path.join(os.path.dirname(__file__), "reference_manifest.txt")
+SURVEY = os.path.join(REPO, "SURVEY.md")
 
 #: file-looking tokens cited in docstrings/comments: a bare word ending in
 #: .py/.tf/.yml, optionally preceded by a path. Config keys like
@@ -33,8 +40,34 @@ def _tree_basenames(root: str) -> set[str]:
     return names
 
 
+def _manifest_paths() -> list[str]:
+    with open(MANIFEST) as f:
+        return [
+            line.strip()
+            for line in f
+            if line.strip() and not line.startswith("#")
+        ]
+
+
+def _reference_basenames() -> set[str]:
+    if os.path.isdir(REFERENCE):
+        return _tree_basenames(REFERENCE)
+    return {os.path.basename(p) for p in _manifest_paths()}
+
+
+def test_reference_manifest_is_cited_by_survey():
+    with open(SURVEY) as f:
+        survey = f.read()
+    uncited = [p for p in _manifest_paths() if f"`{p}" not in survey]
+    assert not uncited, f"manifest entries SURVEY.md does not cite: {uncited}"
+    if os.path.isdir(REFERENCE):
+        names = _tree_basenames(REFERENCE)
+        missing = [p for p in _manifest_paths() if os.path.basename(p) not in names]
+        assert not missing, f"manifest entries absent from {REFERENCE}: {missing}"
+
+
 def test_all_cited_files_resolve():
-    ref_names = _tree_basenames(REFERENCE)
+    ref_names = _reference_basenames()
     repo_names = _tree_basenames(REPO)
     known = ref_names | repo_names
 
@@ -55,6 +88,6 @@ def test_all_cited_files_resolve():
                     rel = os.path.relpath(path, REPO)
                     unresolved.append(f"{rel}: {m.group(0)}")
     assert not unresolved, (
-        "citations that resolve against neither /root/reference nor this "
-        f"repo: {unresolved}"
+        "citations that resolve against neither the reference snapshot "
+        f"(or its manifest) nor this repo: {unresolved}"
     )

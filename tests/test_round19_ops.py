@@ -27,6 +27,7 @@ from cta_train_tracker_analytics_spark.functions.text import (
 from cta_train_tracker_analytics_spark.operators.dedup import (
     _pair_overlap,
     _shingle_rows,
+    doc_shingles,
     doc_tokens,
     exact_dedup,
     hashed_shingles,
@@ -104,8 +105,12 @@ def test_dedup_fragment_twins_exact(spark):
         ).alias("tok"),
     )
     assert _shingle_rows(df, n, "text", "doc_id").sameSemantics(old_rows)
+    # an empty pass-through ``carry`` leaves every builder's plan unchanged
+    assert _shingle_rows(df, n, "text", "doc_id", carry=()).sameSemantics(old_rows)
+    assert doc_shingles(df, n=3).sameSemantics(old_rows.distinct())
     old_hashed = old_rows.select("id", hash60(F.col("tok")).alias("hv"))
     assert hashed_shingles(df, n=3, distinct=False).sameSemantics(old_hashed)
+    assert hashed_shingles(df, n=3).sameSemantics(old_hashed.distinct())
 
     # minhash_signatures' input normalization (the permutation array was
     # already single-parse in r18; the h select changed in r19)

@@ -10,6 +10,7 @@ from __future__ import annotations
 
 import datetime as dt
 
+import pytest
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
@@ -258,12 +259,38 @@ def test_parquet_dir_rows_matches_spark_count(spark, tmp_path):
     """r19: the adaptive-width staging count is a pyarrow footer read (no
     Spark job); it must equal what spark.read.parquet().count() returns,
     including over multi-file dirs."""
-    from cta_train_tracker_analytics_spark.streaming import pipelines as pl
+    from cta_train_tracker_analytics_spark.data import parquet_dir_rows
 
     df = spark.createDataFrame([(i, float(i)) for i in range(123)], "k long, v double")
     d = str(tmp_path / "multi")
     df.repartition(4).write.mode("overwrite").parquet(d)
-    assert pl._parquet_dir_rows(d) == spark.read.parquet(d).count() == 123
+    assert parquet_dir_rows(d) == spark.read.parquet(d).count() == 123
+
+
+def test_parquet_dir_rows_raises_without_part_files(spark, tmp_path):
+    """A missing dir, or a partitioned one (part files one level down),
+    has no *.parquet file to read: the footer count raises instead of
+    reading 0 rows."""
+    from cta_train_tracker_analytics_spark.data import parquet_dir_rows
+
+    with pytest.raises(FileNotFoundError):
+        parquet_dir_rows(str(tmp_path / "missing"))
+    d = str(tmp_path / "partitioned")
+    spark.createDataFrame([(i, i % 3) for i in range(30)], "k long, p int").write.partitionBy(
+        "p"
+    ).parquet(d)
+    with pytest.raises(FileNotFoundError):
+        parquet_dir_rows(d)
+
+
+def test_parquet_dir_rows_counts_an_empty_staging_write(spark, tmp_path):
+    """A staged frame with no rows still lays down a part file; its footer
+    reads 0 rows, no raise."""
+    from cta_train_tracker_analytics_spark.data import parquet_dir_rows
+
+    d = str(tmp_path / "empty")
+    spark.createDataFrame([], "k long").coalesce(1).write.parquet(d)
+    assert parquet_dir_rows(d) == spark.read.parquet(d).count() == 0
 
 
 def test_scoped_state_partitions_extra_confs_restore(spark):
